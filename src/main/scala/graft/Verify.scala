@@ -58,7 +58,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // only the selected queries' oracles: tools/check.py fails every
+    // json entry whose result is missing, so a filtered run must not
+    // list queries it never dumped
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => only.isEmpty || only(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

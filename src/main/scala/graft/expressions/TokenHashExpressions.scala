@@ -53,7 +53,7 @@ object TokenHashUtil {
 
   /** Java-regex `\s`: 0x09 (tab), 0x0A (LF), 0x0B (VT), 0x0C (FF),
     * 0x0D (CR), 0x20 (space). */
-  private def isSep(b: Byte): Boolean =
+  private[expressions] def isSep(b: Byte): Boolean =
     b == 0x20 || (b >= 0x09 && b <= 0x0d)
 
   /** xxhash64-seed-42 of each whitespace-delimited token of lower(s),

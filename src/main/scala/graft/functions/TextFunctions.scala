@@ -151,14 +151,15 @@ object TextFunctions {
           i => s.substr(i + lit(1), lit(k)))))
   }
 
-  /** Word k-shingles (k consecutive tokens joined by a space). */
-  def wordShingles(c: Column, k: Int): Column = {
-    val toks = tokens(lower(c))
-    when(size(toks) < k, array(concat_ws(" ", toks)))
-      .otherwise(array_distinct(
-        transform(sequence(lit(0), size(toks) - lit(k)),
-          i => concat_ws(" ", slice(toks, i + lit(1), lit(k))))))
-  }
+  /** Word k-shingles (k consecutive tokens joined by a space). The
+    * token array is bound once per row (see [[bindOnce]]). */
+  def wordShingles(c: Column, k: Int): Column =
+    bindOnce(tokens(lower(c))) { toks =>
+      when(size(toks) < k, array(concat_ws(" ", toks)))
+        .otherwise(array_distinct(
+          transform(sequence(lit(0), size(toks) - lit(k)),
+            i => concat_ws(" ", slice(toks, i + lit(1), lit(k))))))
+    }
 
   /** MinHash signature of length `m` over a shingle array: element i is
     * min over shingles of xxhash64(xxhash64(shingle), i) — the shingle
@@ -166,13 +167,24 @@ object TextFunctions {
     * base (identical two-stage scheme and values as the aggregate
     * kernel `Dedup.minhashSignatures`; xxhash64 seed-chains its
     * arguments, so hashing the precomputed base then i equals hashing
-    * (base, i) in one call). Deterministic; used for LSH-banded
-    * near-duplicate detection at scale. */
-  def minhashSignature(shingles: Column, m: Int): Column = {
-    val bases = transform(shingles, s => xxhash64(s))
-    transform(sequence(lit(0), lit(m - 1)),
-      i => array_min(transform(bases, h => xxhash64(h, i))))
-  }
+    * (base, i) in one call). The base array is bound once per row, so
+    * the shingle build under it runs once, not once per position.
+    * Deterministic; used for LSH-banded near-duplicate detection at
+    * scale. */
+  def minhashSignature(shingles: Column, m: Int): Column =
+    bindOnce(transform(shingles, s => xxhash64(s))) { bases =>
+      transform(sequence(lit(0), lit(m - 1)),
+        i => array_min(transform(bases, h => xxhash64(h, i))))
+    }
+
+  /** `f(x)` with `x` evaluated once per row. A Column is an expression
+    * tree, so `f` referencing `x` several times (or inside a lambda)
+    * would re-evaluate it at each reference; routing `x` through a
+    * one-element `transform` binds it to a lambda variable instead.
+    * Value-identical to `f(x)`, null included: `f` sees the same value
+    * `x` evaluates to. */
+  private def bindOnce(x: Column)(f: Column => Column): Column =
+    element_at(transform(array(x), f), 1)
 
   /** LSH band keys: hash of each band (contiguous rows of the signature).
     * Docs sharing any band key are near-dup candidates. */

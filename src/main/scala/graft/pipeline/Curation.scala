@@ -4,7 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.graftbridge.Bridge
+
 import graft.QueriesCommon
+import graft.expressions.MinhashMd5Bands
 import graft.functions.{TextFunctions => TF}
 
 /** The COMPOSED training-data curation pipeline: the individual
@@ -103,44 +106,38 @@ object Curation {
   def nearDedupLsh(df: DataFrame): DataFrame =
     df.join(lshDropIds(df), Seq("doc_id"), "left_anti")
 
-  /** The ids the LSH rule drops. The whole signature is MAP-SIDE — the
-    * per-doc minhash is an array fold over the doc's own shingles, not
-    * an explode + re-aggregate (which would shuffle every shingle row
-    * on doc_id before the band pass) — so the only exchange candidate
-    * derivation pays is the narrow (band, v) window over
-    * (doc_id, band, v) triples. The anti-join back to the carried
-    * frame is the one structural cost of ANY dedup stage: the drop
-    * set derives from the same corpus it filters, so the candidate
-    * branch re-scans (doc_id, text) — column-pruned recompute, the
-    * right trade at scale against materializing the full upstream
-    * frame. No explicit distinct on the drop ids: a left-anti only
-    * consults existence, and each id repeats at most 4× (once per
-    * band) — a distinct would add a doc_id exchange to shrink a
-    * build side the join dedups anyway. */
-  private[graft] def lshDropIds(df: DataFrame): DataFrame = {
-    val toks = QueriesCommon.toksExpr
-    // distinct 3-shingles (q_minhash_oracle construction: docs under 3
-    // tokens collapse to one whole-doc shingle; empty docs to [""])
-    val shs = when(size(col("__toks")) < 3,
-        array(array_join(col("__toks"), " ")))
-      .otherwise(expr(
-        "array_distinct(transform(sequence(1, size(__toks) - 2), " +
-          "i -> array_join(slice(__toks, i, 3), ' ')))"))
-    val mhCols = (0 until 8).map(i => expr(
-      s"array_min(transform(__shs, x -> md5(concat('$i:', x))))").as(s"mh$i"))
-    val bands = df.select(col("doc_id"), toks.as("__toks"))
-      .select(col("doc_id"), shs.as("__shs"))
-      .select(col("doc_id") +: mhCols: _*)
-      .select(col("doc_id"), posexplode(array(
-        concat(col("mh0"), col("mh1")), concat(col("mh2"), col("mh3")),
-        concat(col("mh4"), col("mh5")), concat(col("mh6"), col("mh7"))))
-        .as(Seq("band", "v")))
-    bands
+  /** The ids the LSH rule drops. The whole signature is MAP-SIDE —
+    * one codegen'd kernel ([[graft.expressions.MinhashMd5Bands]]) scans
+    * each doc's lowered text once and emits its 4 band keys, which a
+    * posexplode turns into (doc_id, band, v) triples; no shingle or
+    * minhash row is ever exploded and re-aggregated (which would
+    * shuffle every shingle row on doc_id before the band pass) — so
+    * the only exchange candidate derivation pays is the narrow
+    * (band, v) window. The kernel is bit-identical to the SQL
+    * shingle/md5 form it replaced (MinhashMd5Util's argument,
+    * MinhashBandsSpec's property check), null text included: 4 null
+    * keys, so null-text docs share one bucket per band and all but the
+    * lowest id are dropped. The anti-join back to the carried frame is
+    * the one structural cost of ANY dedup stage: the drop set derives
+    * from the same corpus it filters, so the candidate branch re-scans
+    * (doc_id, text) — column-pruned recompute, the right trade at
+    * scale against materializing the full upstream frame. No explicit
+    * distinct on the drop ids: a left-anti only consults existence,
+    * and each id repeats at most 4× (once per band) — a distinct
+    * would add a doc_id exchange to shrink a build side the join
+    * dedups anyway. */
+  private[graft] def lshDropIds(df: DataFrame): DataFrame =
+    df.select(col("doc_id"),
+        posexplode(lshBandKeys(col("text"))).as(Seq("band", "v")))
       .withColumn("__mn", min(col("doc_id")).over(
         Window.partitionBy("band", "v")))
       .filter(col("__mn") < col("doc_id"))
       .select("doc_id")
-  }
+
+  /** The 4 band keys of `text`. The kernel reads the text through
+    * Spark's own `lower`, the case mapping the SQL form used. */
+  private[graft] def lshBandKeys(text: Column): Column =
+    Bridge.column(MinhashMd5Bands(Bridge.expression(lower(text))))
 
   /** Stage 4 — decontamination split: the content-keyed md5 coin of
     * q_split_leakfree (bucket of fp, train < 230) — duplicates of an

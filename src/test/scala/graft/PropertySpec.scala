@@ -15,13 +15,7 @@ import graft.functions.{CleaningFunctions => CF, HashFunctions => HF, VectorFunc
   * across runs) rather than the scalatestplus bridge, which isn't in
   * this build's offline dependency set. */
 class PropertySpec extends SparkSpec {
-
-  /** Evaluate `body` on `n` deterministic samples of `gen`. */
-  private def forAll[A](gen: Gen[A], n: Int = 30)(body: A => Unit): Unit =
-    (0 until n).foreach { i =>
-      gen.apply(Gen.Parameters.default, Seed(i.toLong))
-        .foreach(a => body(a))
-    }
+  import PropertySpec.forAll
 
   private def forAll2[A, B](ga: Gen[A], gb: Gen[B], n: Int)(
       body: (A, B) => Unit): Unit =
@@ -127,4 +121,14 @@ class PropertySpec extends SparkSpec {
       assert(got == want, s"docs=$docs got=$got want=$want")
     }
   }
+}
+
+object PropertySpec {
+  /** Evaluate `body` on `n` deterministic samples of `gen` (sample i
+    * is drawn from seed i). */
+  def forAll[A](gen: Gen[A], n: Int = 30)(body: A => Unit): Unit =
+    (0 until n).foreach { i =>
+      gen.apply(Gen.Parameters.default, Seed(i.toLong))
+        .foreach(a => body(a))
+    }
 }

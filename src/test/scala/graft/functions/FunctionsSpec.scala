@@ -87,6 +87,33 @@ class FunctionsSpec extends SparkSpec {
     assert(one[scala.collection.Seq[String]](TextFunctions.wordShingles(lit("a b"), 3)) == Seq("a b"))
   }
 
+  test("wordShingles / minhashSignature bind their arrays once: values ≡ the inline form, null included") {
+    import spark.implicits._
+    // the pre-binding forms, each array re-evaluated at every reference
+    def shinglesInline(c: org.apache.spark.sql.Column, k: Int) = {
+      val toks = TextFunctions.tokens(lower(c))
+      when(size(toks) < k, array(concat_ws(" ", toks)))
+        .otherwise(array_distinct(
+          transform(sequence(lit(0), size(toks) - lit(k)),
+            i => concat_ws(" ", slice(toks, i + lit(1), lit(k))))))
+    }
+    def signatureInline(sh: org.apache.spark.sql.Column, m: Int) = {
+      val bases = transform(sh, s => xxhash64(s))
+      transform(sequence(lit(0), lit(m - 1)),
+        i => array_min(transform(bases, h => xxhash64(h, i))))
+    }
+    val df = Seq[Option[String]](None, Some(""), Some(" "), Some("\t"),
+      Some("a"), Some("a b"), Some("A b C d"), Some(" a\tb\nc d "),
+      Some("x x x x x x"), Some("\u0130 stra\u00dfe \u00e9t\u00e9 q")).toDF("text")
+    for (k <- Seq(1, 2, 3)) {
+      val bad = df.filter(!(TextFunctions.wordShingles(col("text"), k) <=>
+          shinglesInline(col("text"), k)) ||
+        !(TextFunctions.minhashSignature(TextFunctions.wordShingles(col("text"), k), 8) <=>
+          signatureInline(shinglesInline(col("text"), k), 8))).collect()
+      assert(bad.isEmpty, s"k=$k: ${bad.mkString("; ")}")
+    }
+  }
+
   test("charShingles") {
     val sh = one[scala.collection.Seq[String]](TextFunctions.charShingles(lit("abcd"), 3))
     assert(sh == Seq("abc", "bcd"))

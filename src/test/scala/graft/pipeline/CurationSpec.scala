@@ -62,6 +62,54 @@ class CurationSpec extends SparkSpec {
     assert(kept == Set(20L, 22L), s"got $kept")
   }
 
+  test("LSH drop-id plan: no higher-order function left; the band kernel compiles under whole-stage codegen") {
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import graft.expressions.MinhashMd5Bands
+    val dir = java.nio.file.Files.createTempDirectory("curation-plan")
+    try {
+      // read back from Parquet so the optimizer cannot fold the
+      // projection into a local relation
+      docs((30L, goodText(6), "src1"), (31L, goodText(6), "src1"),
+        (32L, goodText(7), "src1"))
+        .write.mode("overwrite").parquet(dir.toString)
+      val drop = Curation.lshDropIds(spark.read.parquet(dir.toString))
+      val hofs = drop.queryExecution.optimizedPlan.flatMap(_.expressions
+        .flatMap(_.collect {
+          case h: HigherOrderFunction => h
+          case l: LambdaFunction => l
+        }))
+      assert(hofs.isEmpty, s"interpreted HOF tower back in the plan: $hofs")
+      assert(drop.collect().map(_.getLong(0)).toSet == Set(31L))
+      // the executed (final adaptive) plan, query stages unfolded
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec => nodes(q.plan)
+        case other => other +: other.children.flatMap(nodes)
+      }
+      def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+        case _: InputAdapter => Nil
+        case other => other +: other.children.flatMap(stage)
+      }
+      val all = nodes(drop.queryExecution.executedPlan)
+      val holders = all.filter(_.expressions.exists(_.exists(
+        _.isInstanceOf[MinhashMd5Bands])))
+      val wscg = all.collect { case w: WholeStageCodegenExec => w }
+        .filter(w => stage(w.child).exists(n => holders.exists(_ eq n)))
+      assert(holders.nonEmpty && wscg.nonEmpty &&
+        holders.forall(h => wscg.exists(w => stage(w.child).exists(_ eq h))),
+        s"band kernel outside whole-stage codegen:\n${drop.queryExecution.executedPlan}")
+      // and the generated stage compiles (Spark would otherwise fall
+      // back to interpreted evaluation silently)
+      wscg.foreach(w => CodeGenerator.compile(w.doCodeGen()._2))
+    } finally {
+      Option(dir.toFile.listFiles).foreach(_.foreach(_.delete()))
+      dir.toFile.delete()
+    }
+  }
+
   test("decontamination split keeps exactly the train-bucket fps (the q_split_leakfree coin)") {
     val d = docs((0 until 40).map(i =>
       (100L + i, goodText(100 + i), "src1")): _*)
