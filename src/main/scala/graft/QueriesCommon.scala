@@ -123,7 +123,7 @@ object QueriesCommon {
 
   private def branchSession(root: SparkSession, atScale: Boolean,
       shufflePartitions: Long, sizeCls: Int,
-      noRuntimeFilter: Boolean = false): SparkSession = {
+      noRuntimeFilter: Boolean): SparkSession = {
     val s = branchSessions.computeIfAbsent(
       (root, atScale, shufflePartitions, sizeCls, noRuntimeFilter),
       _ => org.apache.spark.sql.graftbridge.Bridge.forkSession(root))
@@ -153,56 +153,42 @@ object QueriesCommon {
     * so the caller's own SQLConf is never touched. The returned
     * DataFrame is bound to the branch session — downstream operators
     * built on it plan (and execute) under the branch settings. */
-  def table(s: SparkSession, dir: String, name: String): DataFrame = {
-    val branch = branchFor(s, dir)
-    val path = s"$dir/$name.parquet"
-    tableCache.computeIfAbsent((branch, path), _ => {
-      val schema = schemaCache.computeIfAbsent(path,
-        q => branch.read.parquet(q).schema)
-      branch.read.schema(schema).parquet(path)
-    })
-  }
-
-  /** The branch session `table(s, dir, _)` binds its frames to — the
-    * size-gated fork every frame over `dir` plans under. */
-  private def branchFor(s: SparkSession, dir: String): SparkSession = {
-    val bytes = totalBytes(dir)
-    val atScale = bytes >= adaptiveMinInputBytes
-    val defaultP = sessionShufflePartitions
-      .computeIfAbsent(s, _.conf.get("spark.sql.shuffle.partitions"))
-    val p =
-      if (atScale) defaultP.toLong
-      else branchFanout(bytes, defaultP.toLong)
-    branchSession(s, atScale, p, sizeClass(bytes, atScale))
-  }
-
-  /** The bucketed-SPINE planning branch: branchFor's conf with runtime
-    * bloom-filter injection off (see `configureBranch`). Frames read
-    * through `bucketedTable` bind here; a query mixing bucketed and
-    * plain frames on the bucketed route reads the plain ones through
-    * [[spineTable]] so everything plans under ONE session. */
-  private def spineBranchFor(s: SparkSession, dir: String): SparkSession = {
-    val bytes = totalBytes(dir)
-    val atScale = bytes >= adaptiveMinInputBytes
-    val defaultP = sessionShufflePartitions
-      .computeIfAbsent(s, _.conf.get("spark.sql.shuffle.partitions"))
-    val p =
-      if (atScale) defaultP.toLong
-      else branchFanout(bytes, defaultP.toLong)
-    branchSession(s, atScale, p, sizeClass(bytes, atScale),
-      noRuntimeFilter = true)
-  }
+  def table(s: SparkSession, dir: String, name: String): DataFrame =
+    branchTable(s, dir, name, noRuntimeFilter = false)
 
   /** A PLAIN table bound to the bucketed-spine branch — for the routes
     * that join bucketed facts with un-bucketed dims. */
-  def spineTable(s: SparkSession, dir: String, name: String): DataFrame = {
-    val branch = spineBranchFor(s, dir)
+  def spineTable(s: SparkSession, dir: String, name: String): DataFrame =
+    branchTable(s, dir, name, noRuntimeFilter = true)
+
+  private def branchTable(s: SparkSession, dir: String, name: String,
+      noRuntimeFilter: Boolean): DataFrame = {
+    val branch = branchFor(s, dir, noRuntimeFilter)
     val path = s"$dir/$name.parquet"
     tableCache.computeIfAbsent((branch, path), _ => {
       val schema = schemaCache.computeIfAbsent(path,
         q => branch.read.parquet(q).schema)
       branch.read.schema(schema).parquet(path)
     })
+  }
+
+  /** The size-gated fork every frame over `dir` plans under. With
+    * `noRuntimeFilter` it is the bucketed-SPINE branch: the same conf
+    * with runtime bloom-filter injection off (see `configureBranch`).
+    * Frames read through `bucketedTable` bind there; a query mixing
+    * bucketed and plain frames on the bucketed route reads the plain
+    * ones through [[spineTable]] so everything plans under ONE
+    * session. */
+  private def branchFor(s: SparkSession, dir: String,
+      noRuntimeFilter: Boolean): SparkSession = {
+    val bytes = totalBytes(dir)
+    val atScale = bytes >= adaptiveMinInputBytes
+    val defaultP = sessionShufflePartitions
+      .computeIfAbsent(s, _.conf.get("spark.sql.shuffle.partitions"))
+    val p =
+      if (atScale) defaultP.toLong
+      else branchFanout(bytes, defaultP.toLong)
+    branchSession(s, atScale, p, sizeClass(bytes, atScale), noRuntimeFilter)
   }
 
   /** The BUCKETED twin of `table`: the same frame read through a
@@ -232,7 +218,8 @@ object QueriesCommon {
     // falls back to the plain route instead of serving stale rows
     else if (graft.ops.Scale.sidecarSourceFp(path).exists(
         _ != graft.ops.Scale.sourceFingerprint(s"$dir/$name.parquet"))) None
-    else graft.ops.Scale.readBucketedDir(spineBranchFor(s, dir), path)
+    else graft.ops.Scale.readBucketedDir(
+      branchFor(s, dir, noRuntimeFilter = true), path)
   }
 
   /** The bucketed layout of `name` carrying at least `cols`, projected
@@ -250,7 +237,7 @@ object QueriesCommon {
 
   private def configureBranch(s: SparkSession, atScale: Boolean,
       shufflePartitions: Long, sizeCls: Int,
-      noRuntimeFilter: Boolean = false): Unit = {
+      noRuntimeFilter: Boolean): Unit = {
     s.conf.set("spark.sql.adaptive.enabled", atScale.toString)
     // The bucketed-spine fork plans with runtime bloom injection OFF:
     // a co-located join has no exchange for the bloom to protect — the

@@ -105,10 +105,6 @@ object PaginatedScan {
     spark.range(start, endInclusive + 1)
       .select(col("id").cast("string").as("id"))
 
-  /** S6c id-list file (`pinecone_export.py:282-284`). */
-  def idListFile(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path).select(col("value").as("id"))
-
   /** S6d integer-window probe (`pinecone_export.py:303-379`): expand
     * [min-1000, max+10000] windows around observed ids, bounded by
     * `maxTries` — driver-sequential by nature (the reference concedes

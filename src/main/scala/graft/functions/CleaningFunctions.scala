@@ -65,10 +65,6 @@ object CleaningFunctions {
   def nanToNullArray(c: Column): Column =
     transform(c, x => when(isnan(x), lit(null)).otherwise(x))
 
-  /** F11 `cleanup_df` timestamp rule (`util.py:369-371`): NaT → epoch 0. */
-  def natToEpoch(c: Column): Column =
-    coalesce(c, to_timestamp(lit("1970-01-01 00:00:00")))
-
   /** F11 Inf → NaN (`util.py:373-375`). */
   def infToNan(c: Column): Column =
     when(c === Double.PositiveInfinity || c === Double.NegativeInfinity,

@@ -17,20 +17,27 @@ object JobProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // written on the listener thread, read on this one: every access
+    // holds the buffer's lock
     val jobStart = mutable.Map[Int, Long]()
     val lines = mutable.ArrayBuffer[String]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobStart(e.jobId) = e.time
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        lines.synchronized { jobStart(e.jobId) = e.time }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = lines.synchronized {
         lines += f"job ${e.jobId}%3d  ${(e.time - jobStart.getOrElse(e.jobId, e.time)) / 1e3}%.2f s"
+      }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
         val dt = (for {a <- si.completionTime; b <- si.submissionTime}
           yield (a - b) / 1e3).getOrElse(-1.0)
-        lines += f"  stage ${si.stageId}%3d ${si.numTasks}%4d tasks  $dt%.2f s  ${si.name.take(60)}"
+        lines.synchronized {
+          lines += f"  stage ${si.stageId}%3d ${si.numTasks}%4d tasks  $dt%.2f s  ${si.name.take(60)}"
+        }
       }
     })
+    def drain(): Unit =
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
     for (n <- name.split(",").map(_.trim).filter(_.nonEmpty)) {
       val fn = graft.SparkEntry.queries(n)
       fn(spark, dir).count() // warm
@@ -39,12 +46,12 @@ object JobProbe {
       // this, a query with a persist barrier probed with the fill jobs
       // already warm, under-counting its bench-visible jobs)
       spark.catalog.clearCache()
-      Thread.sleep(300); lines.clear()
+      drain(); lines.synchronized(lines.clear())
       val t0 = System.nanoTime()
       fn(spark, dir).count()
       val total = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      lines.foreach(println)
+      drain()
+      lines.synchronized(lines.toList).foreach(println)
       println(f"TOTAL $n $total%.2f s")
     }
     spark.stop()

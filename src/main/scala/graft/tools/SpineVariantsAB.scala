@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,14 +44,16 @@ object SpineVariantsAB {
       var cpuMs = 0L; var spill = 0L; var peak = 0L
       def reset(): Unit = { cpuMs = 0; spill = 0; peak = 0 }
     }
+    // per task: CPU and spill add up, peak execution memory is the
+    // largest single task's (a sum of peaks is no peak)
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        val m = e.taskMetrics
         if (m != null) {
           agg.synchronized {
             agg.cpuMs += m.executorCpuTime / 1000000
             agg.spill += m.diskBytesSpilled
-            agg.peak += m.peakExecutionMemory
+            agg.peak = math.max(agg.peak, m.peakExecutionMemory)
           }
         }
       }
@@ -142,9 +144,13 @@ object SpineVariantsAB {
       agg.synchronized(agg.reset())
       val t0 = System.nanoTime()
       act()
+      val wall = (System.nanoTime() - t0) / 1e9
+      // task-end events arrive asynchronously; read totals only after
+      // the bus has delivered all of this variant's
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
       val (c, s, pk) = agg.synchronized((agg.cpuMs, agg.spill, agg.peak))
-      println(f"pass$p $label%-14s wall=${(System.nanoTime() - t0) / 1e9}%6.2f s " +
-        f"cpu=${c / 1000}%5ds spill=${s / 1e9}%.2f GB peakMem=${pk / 1e9}%.1f GB")
+      println(f"pass$p $label%-14s wall=$wall%6.2f s " +
+        f"cpu=${c / 1000}%5ds spill=${s / 1e9}%.2f GB peakTaskMem=${pk / 1e9}%.2f GB")
     }
     spark.stop()
   }

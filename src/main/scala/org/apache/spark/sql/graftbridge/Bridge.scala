@@ -34,4 +34,11 @@ object Bridge {
   def forkSession(spark: org.apache.spark.sql.SparkSession)
       : org.apache.spark.sql.SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** Block until the listener bus has delivered every event posted so
+    * far. Job and stage end events reach listeners asynchronously, so
+    * a listener's totals read right after an action returns can miss
+    * the last stages; `waitUntilEmpty` is `private[spark]`. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

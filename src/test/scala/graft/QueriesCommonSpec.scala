@@ -81,6 +81,24 @@ class QueriesCommonSpec extends SparkSpec {
     }
   }
 
+  test("spineTable binds to the table branch with only bloom injection off, in both regimes") {
+    // One resolver serves both loaders; the spine flag may change the
+    // runtime-filter switch and nothing else of the branch conf.
+    val bloom = "spark.sql.optimizer.runtime.bloomFilter.enabled"
+    for (threshold <- Seq(None, Some("1"))) withThreshold(threshold) {
+      val plain = QueriesCommon.table(spark, dir, "documents").sparkSession
+      val spine = QueriesCommon.spineTable(spark, dir, "documents").sparkSession
+      assert(plain ne spine, s"threshold $threshold: one shared branch")
+      assert(plain.conf.get(bloom) == "true")
+      assert(spine.conf.get(bloom) == "false")
+      val p = plain.conf.getAll - bloom
+      val q = spine.conf.getAll - bloom
+      val diff = (p.keySet ++ q.keySet).filter(k => p.get(k) != q.get(k))
+      assert(diff.isEmpty, s"threshold $threshold: branch confs differ on " +
+        diff.toSeq.sorted.map(k => s"$k=${p.get(k)}/${q.get(k)}").mkString(", "))
+    }
+  }
+
   test("table() never mutates the caller's session conf") {
     val before = Seq(
       "spark.sql.adaptive.enabled",

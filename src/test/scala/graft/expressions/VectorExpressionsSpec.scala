@@ -1,8 +1,12 @@
 package graft.expressions
 
+import graft.PropertySpec.forAll
 import graft.SparkSpec
 import graft.functions.{VectorFunctions => VF}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
+import org.scalacheck.Gen
 
 class VectorExpressionsSpec extends SparkSpec {
 
@@ -30,7 +34,7 @@ class VectorExpressionsSpec extends SparkSpec {
     }.toDF("id", "va", "vb")
     val diff = vecs.select(
         (GraftExtensions.dot(col("va"), col("vb")) -
-         VF.dotProduct(col("va"), col("vb"))).as("d"))
+         VF.dotProductHof(col("va"), col("vb"))).as("d"))
       .agg(max(abs(col("d")))).collect().head.getDouble(0)
     assert(diff == 0.0, s"native vs HOF dot differ by $diff")
     val diffCos = vecs.select(
@@ -50,6 +54,52 @@ class VectorExpressionsSpec extends SparkSpec {
     val rows = df.select(GraftExtensions.dot(col("x"), col("y")).as("d")).collect()
     assert(rows.forall(_.isNullAt(0)),
       "null poisons the fold, exactly like aggregate(zip_with(...)) and the oracle")
+  }
+
+  test("dotProduct ≡ dotProductHof on generated arrays: null elements, ragged, null arrays") {
+    // element values include signed zeros, NaN, infinities and values
+    // whose products overflow float but not double
+    val elem: Gen[java.lang.Float] = Gen.frequency(
+      8 -> Gen.chooseNum(-1e3f, 1e3f).map(java.lang.Float.valueOf),
+      1 -> Gen.oneOf(0.0f, -0.0f, Float.NaN, Float.PositiveInfinity,
+        Float.NegativeInfinity, Float.MaxValue, Float.MinPositiveValue)
+        .map(java.lang.Float.valueOf),
+      1 -> Gen.const(null))
+    val vec: Gen[Array[java.lang.Float]] = Gen.frequency(
+      9 -> Gen.chooseNum(0, 40).flatMap(n => Gen.listOfN(n, elem)).map(_.toArray),
+      1 -> Gen.const(null))
+    // same length most of the time so the fold is reached
+    val pair: Gen[(Array[java.lang.Float], Array[java.lang.Float])] =
+      Gen.frequency(
+        4 -> Gen.chooseNum(0, 40).flatMap(n => Gen.zip(
+          Gen.listOfN(n, elem).map(_.toArray),
+          Gen.listOfN(n, elem).map(_.toArray))),
+        1 -> Gen.zip(vec, vec))
+    val pairs = Seq.newBuilder[(Array[java.lang.Float], Array[java.lang.Float])]
+    forAll(pair, 400)(pairs += _)
+    val data = pairs.result().zipWithIndex.map { case ((x, y), i) => Row(i.toLong, x, y) }
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("x", ArrayType(FloatType)), StructField("y", ArrayType(FloatType))))
+    val local = spark.createDataFrame(java.util.Arrays.asList(data: _*), schema)
+    val viaRdd = spark.createDataFrame(spark.sparkContext.parallelize(data, 2), schema)
+    // the local relation is evaluated interpreted; the RDD scan runs
+    // the projection inside whole-stage codegen
+    for ((df, mode) <- Seq(local -> "interpreted", viaRdd -> "codegen")) {
+      val got = df.select(col("id"),
+          VF.dotProduct(col("x"), col("y")).as("n"),
+          VF.dotProductHof(col("x"), col("y")).as("h"))
+        .collect()
+      assert(got.length == data.length)
+      def bits(r: Row, k: Int): Option[Long] =
+        if (r.isNullAt(k)) None
+        else Some(java.lang.Double.doubleToLongBits(r.getDouble(k)))
+      val bad = got.filter(r => bits(r, 1) != bits(r, 2))
+      assert(bad.isEmpty, s"$mode: dotProduct differs from the HOF reference on " +
+        s"${bad.length} rows: " + bad.take(3).map(r =>
+          s"id=${r.getLong(0)} ${r.get(1)} vs ${r.get(2)}").mkString("; "))
+      // the sample holds both null and non-null results
+      assert(got.exists(_.isNullAt(1)) && got.exists(r => !r.isNullAt(1)))
+    }
   }
 
   test("SQL registration via GraftExtensions.register") {
